@@ -21,9 +21,10 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from bbdc20_submission_spark.functions.sqlfrag import lit
 from bbdc20_submission_spark.operators.text import STOPWORDS, TOKEN_PATTERN
 
-_SW = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
+_SW = ", ".join(lit(w) for w in STOPWORDS["en"])
 
 # shared ratio fragments. Char-class counts go through translate
 # (delete the class, diff the lengths) — bit-identical to the
@@ -34,7 +35,7 @@ _NT = "size(split(t, ' '))"
 _NC = "length(t)"
 _LETTERS = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"
 _DIGITS = "(length(t) - length(translate(t, '0123456789', '')))"
-_ALPHA = f"(length(t) - length(translate(t, '{_LETTERS}', '')))"
+_ALPHA = f"(length(t) - length(translate(t, {lit(_LETTERS)}, '')))"
 _SPACES = "(length(t) - length(translate(t, ' ', '')))"
 _SWHITS = f"size(filter(split(t, ' '), x -> array_contains(array({_SW}), x)))"
 
@@ -51,7 +52,7 @@ def _definitions() -> dict[str, str]:
         # text analysis
         "sg_ws_tokens(t STRING) RETURNS INT": _NT,
         "sg_bpe_tokens(t STRING) RETURNS INT": (
-            f"size(regexp_extract_all(t, '{TOKEN_PATTERN}', 0))"
+            f"size(regexp_extract_all(t, {lit(TOKEN_PATTERN)}, 0))"
         ),
         "sg_stopword_ratio(t STRING) RETURNS DOUBLE": f"{_SWHITS} / {_NT}",
         "sg_quality(t STRING) RETURNS DOUBLE": f"round({quality}, 6)",

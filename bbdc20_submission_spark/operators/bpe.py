@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bbdc20_submission_spark.functions.sqlfrag import lit
 from bbdc20_submission_spark.operators.text import ws_tokens
 
 END = "</w>"
@@ -42,13 +43,11 @@ def _merge_pair_expr(col: str, a: str, b: str) -> str:
     symbol array, replacing each adjacent (a, b) with a||b; a symbol
     consumed by a merge can't start another (greedy semantics, matched
     by the local reference implementation in tests)."""
-    qa, qb = a.replace("'", "''"), b.replace("'", "''")
-    qab = (a + b).replace("'", "''")
     return (
         f"aggregate({col}, CAST(array() AS ARRAY<STRING>), (acc, x) -> "
-        f"CASE WHEN size(acc) > 0 AND element_at(acc, -1) = '{qa}' "
-        f"AND x = '{qb}' "
-        f"THEN concat(slice(acc, 1, size(acc) - 1), array('{qab}')) "
+        f"CASE WHEN size(acc) > 0 AND element_at(acc, -1) = {lit(a)} "
+        f"AND x = {lit(b)} "
+        f"THEN concat(slice(acc, 1, size(acc) - 1), array({lit(a + b)})) "
         "ELSE concat(acc, array(x)) END)"
     )
 

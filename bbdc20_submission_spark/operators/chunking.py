@@ -21,11 +21,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bbdc20_submission_spark.operators.text import (
-    _ws_tokens_sql,
-    sql_str_lit,
-    ws_tokens,
-)
+from bbdc20_submission_spark.functions.sqlfrag import ident, lit, with_sql
+from bbdc20_submission_spark.operators.text import _ws_tokens_sql
 
 
 def chunk_by_tokens(
@@ -62,17 +59,16 @@ def chunk_by_tokens(
         f"/ {float(stride)!r}D), 1) - 1 AS BIGINT)), "
         f"i -> slice(`_toks`, CAST(i * {stride} + 1 AS INT), {chunk_tokens}))"
     )
-    keep = [f"`{c}`" for c in keep_cols]
-    base = df.selectExpr(
-        f"`{id_col}`", *keep, f"{_ws_tokens_sql(text_col)} AS _toks"
-    )
+    key = ident(id_col)
+    keep = [ident(c) for c in keep_cols]
+    base = df.selectExpr(key, *keep, f"{_ws_tokens_sql(text_col)} AS _toks")
     out = base.selectExpr(
-        f"`{id_col}`",
+        key,
         *keep,
         f"posexplode({chunks_sql}) AS (chunk_id, _chunk)",
     )
     return out.selectExpr(
-        f"`{id_col}`",
+        key,
         "CAST(chunk_id AS BIGINT) AS chunk_id",
         "concat_ws(' ', _chunk) AS chunk_text",
         "CAST(size(_chunk) AS BIGINT) AS n_tokens",
@@ -110,28 +106,23 @@ def pack_sequences(
     # parsed-SQL projections (r14): the bucket/window/arith Column
     # assembly cost ~30 py4j round trips per call
     bucket = (
-        "pmod(CAST(conv(substring(md5(CAST(`%s` AS STRING)), 1, 8), 16, 10)"
-        " AS BIGINT), %d) AS pack_bucket" % (id_col, n_buckets)
+        f"pmod(CAST(conv(substring(md5(CAST({ident(id_col)} AS STRING)), "
+        f"1, 8), 16, 10) AS BIGINT), {n_buckets})"
     )
+    tokens = ident(tokens_col)
     start = (
-        f"sum(`{tokens_col}`) OVER (PARTITION BY pack_bucket "
-        f"ORDER BY `{id_col}` ASC, `{chunk_col}` ASC "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) "
-        f"- `{tokens_col}` AS _start"
+        f"sum({tokens}) OVER (PARTITION BY pack_bucket "
+        f"ORDER BY {ident(id_col)} ASC, {ident(chunk_col)} ASC "
+        f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - {tokens}"
     )
-    return (
-        chunks.selectExpr("*", bucket)
-        .selectExpr("*", start)
-        .selectExpr(
-            "*",
-            f"CAST(floor(_start / {budget_tokens}) AS BIGINT) AS seq_id",
-        )
-        .selectExpr(
-            *[f"`{c}`" for c in chunks.columns],
-            "pack_bucket",
-            "seq_id",
-            f"CAST(_start - seq_id * {budget_tokens} AS BIGINT) AS seq_pos",
-        )
+    tagged = with_sql(with_sql(chunks, pack_bucket=bucket), _start=start)
+    seq = with_sql(
+        tagged, seq_id=f"CAST(floor(_start / {budget_tokens}) AS BIGINT)"
+    )
+    return with_sql(
+        seq,
+        [c for c in seq.columns if c != "_start"],
+        seq_pos=f"CAST(_start - seq_id * {budget_tokens} AS BIGINT)",
     )
 
 
@@ -325,20 +316,10 @@ def scrub_text(
 ) -> DataFrame:
     """PII/noise scrubbing as chained regexp_replace (single narrow
     projection; rules applied in SCRUB_RULES order)."""
-    expr = f"`{text_col}`"
+    expr = ident(text_col)
     for pattern, repl in SCRUB_RULES:
-        expr = (
-            f"regexp_replace({expr}, {sql_str_lit(pattern)}, "
-            f"{sql_str_lit(repl)})"
-        )
-    if out_col in df.columns:  # keep withColumn's replace semantics
-        return df.selectExpr(
-            *[
-                f"{expr} AS `{c}`" if c == out_col else f"`{c}`"
-                for c in df.columns
-            ]
-        )
-    return df.selectExpr("*", f"{expr} AS `{out_col}`")
+        expr = f"regexp_replace({expr}, {lit(pattern)}, {lit(repl)})"
+    return with_sql(df, **{out_col: expr})
 
 
 def connected_components(

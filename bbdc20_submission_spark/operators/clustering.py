@@ -35,6 +35,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bbdc20_submission_spark.functions.sqlfrag import ident
+
 
 # assignment strategy switch: at or below this k the per-centroid
 # distance expressions stay comfortably inside whole-stage codegen;
@@ -377,7 +379,7 @@ def _with_cluster(
     k = int(centers.shape[0])
     dim = int(centers.shape[1]) if centers.ndim == 2 else 0
     if k <= _EXPR_MAX_K and (keep_dists or k * dim <= _EXPR_MAX_KDIM):
-        arr_sql = f"CAST(`{vec_col}` AS array<double>)"
+        arr_sql = f"CAST({ident(vec_col)} AS array<double>)"
         dists = F.expr(
             "array(%s)" % ",".join(_dist2_sql(arr_sql, c) for c in centers.tolist())
         )
@@ -604,9 +606,9 @@ def ivf_topk(
     # fold, same _qn * _cn product — the r12 bruteforce precedent).
     c = _with_cluster(
         corpus.selectExpr(
-            f"`{id_col}` AS match_id",
-            f"`{vec_col}` AS _cv",
-            f"{l2_norm_sql(f'`{vec_col}`')} AS _cn",
+            f"{ident(id_col)} AS match_id",
+            f"{ident(vec_col)} AS _cv",
+            f"{l2_norm_sql(ident(vec_col))} AS _cn",
         ),
         model.centers,
         "_cv",
@@ -616,7 +618,7 @@ def ivf_topk(
     # tiny literal array — pure narrow expression) and explode the
     # nprobe nearest cells per query
     centers = [ctr.tolist() for ctr in model.clusterCenters()]
-    qarr_sql = f"CAST(`{vec_col}` AS array<double>)"
+    qarr_sql = f"CAST({ident(vec_col)} AS array<double>)"
     ranked_sql = "array_sort(array(%s))" % ",".join(
         f"named_struct('d', {_dist2_sql(qarr_sql, ctr)}, 'i', CAST({i} AS BIGINT))"
         for i, ctr in enumerate(centers)
@@ -627,7 +629,7 @@ def ivf_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("_qv"),
-        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("_qn"),
+        F.expr(l2_norm_sql(ident(vec_col))).alias("_qn"),
         F.explode(probes).alias("cluster"),
     )
     scored = (

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bbdc20_submission_spark.caching import managed_persist
+from bbdc20_submission_spark.functions.sqlfrag import ident, with_sql
 from bbdc20_submission_spark.operators.text import _ws_tokens_sql, ws_tokens
 
 
@@ -88,16 +89,15 @@ def _apply_sub_buckets(
     ``1-(1-1/m)^k`` of pairs matching in k bands instead of ``1/m``."""
     # one parsed projection (r14): the when/pmod/ceil Column assembly
     # cost ~12 py4j round trips per call
-    hash_args = ", ".join(f"`{c}`" for c in (id_col, *salt_cols))
+    hash_args = ", ".join(ident(c) for c in (id_col, *salt_cols))
     sub = (
         "CAST(CASE WHEN _bn IS NOT NULL THEN "
         f"pmod(xxhash64({hash_args}), "
         f"CAST(ceil(_bn / {cap}) AS BIGINT)) "
-        "ELSE 0 END AS BIGINT) AS sub_bucket"
+        "ELSE 0 END AS BIGINT)"
     )
-    return frame.join(F.broadcast(hot), bucket_cols, "left").selectExpr(
-        *[f"`{c}`" for c in frame.columns], sub
-    )
+    joined = frame.join(F.broadcast(hot), bucket_cols, "left")
+    return with_sql(joined, frame.columns, sub_bucket=sub)
 
 
 def _multi_sub_buckets(
@@ -217,30 +217,6 @@ def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
     return F.array_distinct(
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
-    )
-
-
-def word_shingles(text: Column | str, k: int = 3) -> Column:
-    """k-word shingles as strings -> array<string> (distinct).
-
-    NOTE: inline form — the tokenizer is re-evaluated per shingle
-    index inside the transform (no CSE across HOF lambdas). Fine for
-    tests/small frames; hot paths should project ``ws_tokens`` into a
-    column and use ``shingles_from_tokens`` (measured ~4x)."""
-    return shingles_from_tokens(ws_tokens(text), k)
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature: for seed s, min over shingles of
-    xxhash64(shingle, s) -> array<long> of length num_hashes.
-
-    One narrow pass; signature width is constant so downstream shuffle
-    volume is O(docs), not O(text)."""
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, lambda x: F.xxhash64(x, F.lit(s))))
-            for s in range(num_hashes)
-        ]
     )
 
 
@@ -559,9 +535,9 @@ def hashed_shingle_sets(
         f"{shingle_k - 1}, 1)), i -> concat_ws(' ', slice(_toks, i, "
         f"{shingle_k}))))"
     )
-    carry_sql = [f"`{c}`" for c in carry]
+    carry_sql = [ident(c) for c in carry]
     return df.selectExpr(
-        f"`{id_col}` AS _sid",
+        f"{ident(id_col)} AS _sid",
         f"{_ws_tokens_sql(text_col)} AS _toks",
         *carry_sql,
     ).selectExpr(
@@ -650,20 +626,20 @@ def jaccard_pairs(
         "_sid AS id_a",
         "_shingles AS _sa",
         "size(_shingles) AS _na",
-        *[f"`{c}` AS `{c}_a`" for c in carry],
+        *[f"{ident(c)} AS {ident(c + '_a')}" for c in carry],
     )
     b = sets_df.selectExpr(
         "_sid AS id_b",
         "_shingles AS _sb",
         "size(_shingles) AS _nb",
-        *[f"`{c}` AS `{c}_b`" for c in carry],
+        *[f"{ident(c)} AS {ident(c + '_b')}" for c in carry],
     )
     joined = pairs.join(a, "id_a").join(b, "id_b")
     if min_jaccard is not None:
         joined = joined.filter(
             f"least(_na, _nb) >= {float(min_jaccard)!r}D * greatest(_na, _nb)"
         )
-    carried = [f"`{c}_{side}`" for c in carry for side in ("a", "b")]
+    carried = [ident(f"{c}_{side}") for c in carry for side in ("a", "b")]
     return joined.selectExpr(
         "id_a",
         "id_b",
@@ -1525,7 +1501,7 @@ def duplicate_span_stats(
     L = int(span_tokens)
     if L < 2:
         raise ValueError(f"span_tokens must be >= 2, got {span_tokens}")
-    base = df.selectExpr(f"`{id_col}`", f"{_ws_tokens_sql(text_col)} AS _t")
+    base = df.selectExpr(ident(id_col), f"{_ws_tokens_sql(text_col)} AS _t")
     occ = _window_occurrences(base, id_col, L)
     dup = managed_persist(
         occ.groupBy("_h")
@@ -1570,7 +1546,7 @@ def _window_occurrences(base: DataFrame, id_col: str, L: int) -> DataFrame:
     )
     # inline() explodes the struct array straight to (_s, _h) — one
     # projection instead of explode + unpack (r14)
-    return base.selectExpr(f"`{id_col}`", f"inline({gram_expr})")
+    return base.selectExpr(ident(id_col), f"inline({gram_expr})")
 
 
 def _excise_flagged(
@@ -1604,20 +1580,20 @@ def _excise_flagged(
     # the analyzer extracted before — one Sort+Exchange either way,
     # identical values.
     over_prev = (
-        f"OVER (PARTITION BY `{id_col}` ORDER BY _s "
+        f"OVER (PARTITION BY {ident(id_col)} ORDER BY _s "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
     )
     over_cum = (
-        f"OVER (PARTITION BY `{id_col}` ORDER BY _s "
+        f"OVER (PARTITION BY {ident(id_col)} ORDER BY _s "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
+    ended = with_sql(flagged, _e=f"_s + {L - 1}")
+    prev = with_sql(ended, _prev=f"max(_e) {over_prev}")
     islands = (
-        flagged.selectExpr("*", f"_s + {L - 1} AS _e")
-        .selectExpr("*", f"max(_e) {over_prev} AS _prev")
-        .selectExpr(
-            "*",
-            "sum(CASE WHEN _prev IS NULL OR _s > _prev + 1 THEN 1 "
-            f"ELSE 0 END) {over_cum} AS _isl",
+        with_sql(
+            prev,
+            _isl="sum(CASE WHEN _prev IS NULL OR _s > _prev + 1 THEN 1 "
+            f"ELSE 0 END) {over_cum}",
         )
         .groupBy(id_col, "_isl")
         .agg(F.min("_s").alias("s"), F.max("_e").alias("e"))
@@ -1633,10 +1609,11 @@ def _excise_flagged(
         "sp -> i >= sp.s AND i <= sp.e)), "
         "i -> element_at(_t, CAST(i AS INT))), ' ')"
     )
+    n, removed = ident(n_col), ident(removed_col)
     return base.join(F.broadcast(per_doc), id_col, "left").selectExpr(
-        f"`{id_col}`",
-        f"CAST(coalesce(`{n_col}`, 0) AS BIGINT) AS `{n_col}`",
-        f"CAST(coalesce(`{removed_col}`, 0) AS BIGINT) AS `{removed_col}`",
+        ident(id_col),
+        f"CAST(coalesce({n}, 0) AS BIGINT) AS {n}",
+        f"CAST(coalesce({removed}, 0) AS BIGINT) AS {removed}",
         f"{kept_expr} AS clean_text",
     )
 
@@ -1670,11 +1647,11 @@ def decontaminate_spans(
     if L < 2:
         raise ValueError(f"k must be >= 2, got {k}")
     base = corpus.selectExpr(
-        f"`{id_col}`", f"{_ws_tokens_sql(text_col)} AS _t"
+        ident(id_col), f"{_ws_tokens_sql(text_col)} AS _t"
     )
     eval_base = eval_set.selectExpr(f"{_ws_tokens_sql(text_col)} AS _t")
     eval_hashes = (
-        _window_occurrences(eval_base.selectExpr("*", "0 AS _eid"), "_eid", L)
+        _window_occurrences(with_sql(eval_base, _eid="0"), "_eid", L)
         .select("_h")
         .distinct()
     )

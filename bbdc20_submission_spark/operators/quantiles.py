@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bbdc20_submission_spark.functions.sqlfrag import ident
+
 
 def exact_percentile(
     df: DataFrame, col: str, p: float, accuracy: int = 10_000
@@ -119,7 +121,7 @@ def exact_percentile_frame(
         )
     # parsed-SQL projections (r14): the bracket/interpolation Column
     # assembly cost ~50 py4j round trips per build
-    base = df.selectExpr(f"CAST(`{col}` AS DOUBLE) AS _v").filter(
+    base = df.selectExpr(f"CAST({ident(col)} AS DOUBLE) AS _v").filter(
         "_v IS NOT NULL"
     )
     p_lo = f"{max(0.0, p - 0.01)!r}D"
@@ -163,7 +165,7 @@ def exact_percentile_frame(
         "CASE WHEN _n IS NULL OR _n = 0 THEN CAST(NULL AS DOUBLE) "
         f"WHEN {frac} = 0 OR {vk1} = {vk} THEN {vk} "
         f"ELSE {vk} * (1.0D - {frac}) + {vk1} * {frac} END "
-        f"AS `{out_col}`"
+        f"AS {ident(out_col)}"
     )
 
 

@@ -27,10 +27,10 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bbdc20_submission_spark.operators.text import sql_str_lit
+from bbdc20_submission_spark.functions.sqlfrag import ident, lit, with_sql
 
 # hash-threshold resolution: fractions are quantized to 1/2^20
 _BUCKETS = 1 << 20
@@ -59,9 +59,9 @@ def portable_hash_bucket(id_col: Column, seed: int) -> Column:
 def _bucket_sql(id_col: str, seed: int, portable: bool) -> str:
     """SQL fragment of ``_hash_bucket`` / ``portable_hash_bucket`` over
     a plain column name — parses to the identical expressions."""
-    i = f"`{id_col}`"
+    i = ident(id_col)
     if portable:
-        salt = sql_str_lit(f":{seed}")
+        salt = lit(f":{seed}")
         return (
             f"pmod(CAST(conv(substring(md5(concat(CAST({i} AS STRING), "
             f"{salt})), 1, 8), 16, 10) AS BIGINT), {_BUCKETS})"
@@ -69,11 +69,10 @@ def _bucket_sql(id_col: str, seed: int, portable: bool) -> str:
     return f"pmod(xxhash64({i}, {seed}), {_BUCKETS})"
 
 
-def _map_sql(entries: Mapping, value_fmt) -> str:
-    """``map(k1, v1, ...)`` literal over sorted string keys."""
+def _map_sql(entries: Mapping) -> str:
+    """``map(k1, v1, ...)`` literal over sorted keys."""
     return "map(%s)" % ", ".join(
-        f"{sql_str_lit(k)}, {value_fmt(v)}"
-        for k, v in sorted(entries.items())
+        f"{lit(k)}, {lit(v)}" for k, v in sorted(entries.items())
     )
 
 
@@ -98,10 +97,10 @@ def stratified_sample(
     md5-based ``portable_hash_bucket`` so the membership is
     reproducible OUTSIDE Spark too (audits, oracles)."""
     thr_map = _map_sql(
-        fractions, lambda frac: str(int(frac * _BUCKETS))
+        {k: int(frac * _BUCKETS) for k, frac in fractions.items()}
     )
     thr = (
-        f"coalesce({thr_map}[`{strata_col}`], "
+        f"coalesce({thr_map}[{ident(strata_col)}], "
         f"{int(default_fraction * _BUCKETS)})"
     )
     return df.filter(
@@ -130,13 +129,13 @@ def reservoir_per_stratum(
             "reservoir_per_stratum reserves the working column '_rk';"
             " rename it on the input frame"
         )
-    parts = ", ".join(f"`{c}`" for c in strata_cols)
+    parts = ", ".join(ident(c) for c in strata_cols)
     rk = (
         f"row_number() OVER (PARTITION BY {parts} ORDER BY "
-        f"{_bucket_sql(id_col, seed, portable)} ASC, `{id_col}` ASC) AS _rk"
+        f"{_bucket_sql(id_col, seed, portable)} ASC, {ident(id_col)} ASC)"
     )
     return (
-        df.selectExpr("*", rk)
+        with_sql(df, _rk=rk)
         .filter(F.col("_rk") <= k)
         .drop("_rk")
     )
@@ -182,7 +181,7 @@ def mixture_sample(
     total = counts.agg(F.sum("_n_s").alias("_n"))
     # D-suffixed literals parse directly as DOUBLE (a bare 0.6 would
     # be DECIMAL), exactly the values F.lit(float(w)) carried
-    wmap = _map_sql(target_weights, lambda w: f"{float(w)!r}D")
+    wmap = _map_sql({k: float(w) for k, w in target_weights.items()})
     # floor, not cast: Spark's double->long cast truncates but DuckDB's
     # ROUNDS — an explicit floor is the form both engines agree on
     # (thresholds are non-negative)
@@ -190,18 +189,18 @@ def mixture_sample(
         f"floor(least(CAST({_BUCKETS} AS DOUBLE), "
         f"{float(total_fraction)!r}D "
         f"* CAST(_n AS DOUBLE) "
-        f"* coalesce({wmap}[`{strata_col}`], 0.0D) "
+        f"* coalesce({wmap}[{ident(strata_col)}], 0.0D) "
         f"/ CAST(_n_s AS DOUBLE) * {_BUCKETS})) AS _thr"
     )
     # eqNullSafe, matching token_budget_sample: a NULL stratum is a
     # legitimate group and must take the unlisted-stratum weight-0
     # path (dropped by rate), not vanish by equi-join mechanics
     dim = counts.crossJoin(F.broadcast(total)).selectExpr(
-        f"`{strata_col}` AS _strata_d", thr
+        f"{ident(strata_col)} AS _strata_d", thr
     )
     return (
         df.join(
-            F.broadcast(dim), F.expr(f"`{strata_col}` <=> _strata_d")
+            F.broadcast(dim), F.expr(f"{ident(strata_col)} <=> _strata_d")
         )
         .filter(
             f"{_bucket_sql(id_col, seed, portable)} < _thr"
@@ -245,11 +244,11 @@ def split_assign(
         acc += float(w) / total
         edges.append(int(acc * _BUCKETS))
     branches = " ".join(
-        f"WHEN {b} < {edge} THEN {sql_str_lit(name)}"
+        f"WHEN {b} < {edge} THEN {lit(name)}"
         for name, edge in zip(names[:-1], edges)
     )
-    case = f"CASE {branches} ELSE {sql_str_lit(names[-1])} END"
-    return df.selectExpr("*", f"{case} AS `{out_col}`")
+    case = f"CASE {branches} ELSE {lit(names[-1])} END"
+    return with_sql(df, **{out_col: case})
 
 
 def token_budget_sample(
@@ -303,8 +302,8 @@ def token_budget_sample(
     coarse = f"CAST(floor({fine} / {_BUCKETS // n_coarse}) AS BIGINT)"
 
     if isinstance(budgets, Mapping):
-        bmap = _map_sql(budgets, lambda n: str(int(n)))
-        budget = f"coalesce({bmap}[`{strata_col}`], 0)"
+        bmap = _map_sql({k: int(n) for k, n in budgets.items()})
+        budget = f"coalesce({bmap}[{ident(strata_col)}], 0)"
     else:
         budget = str(int(budgets))
     budget = f"CAST({budget} AS DOUBLE)"
@@ -314,14 +313,14 @@ def token_budget_sample(
         .agg(F.sum(F.col(tokens_col).cast("double")).alias("_t"))
     )
     cum0 = (
-        f"sum(_t) OVER (PARTITION BY `{strata_col}` ORDER BY _cb ASC "
+        f"sum(_t) OVER (PARTITION BY {ident(strata_col)} ORDER BY _cb ASC "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - _t AS _cum0"
     )
     dim = (
-        per.selectExpr(f"`{strata_col}`", "_cb", "_t", cum0,
+        per.selectExpr(ident(strata_col), "_cb", "_t", cum0,
                        f"{budget} AS _budget")
         .selectExpr(
-            f"`{strata_col}` AS _ds",
+            f"{ident(strata_col)} AS _ds",
             "_cb AS _dcb",
             "CASE WHEN _cum0 >= _budget THEN 0 "
             "WHEN _cum0 + _t < _budget THEN 2 ELSE 1 END AS _cls",
@@ -335,24 +334,22 @@ def token_budget_sample(
     # stratum like any other (groupBy and the window already treat it
     # as one group; a plain equi-join would silently drop its rows)
     tagged = (
-        df.selectExpr("*", f"{fine} AS _fb", f"{coarse} AS _cb")
+        with_sql(df, _fb=fine, _cb=coarse)
         .join(
             F.broadcast(dim),
-            F.expr(f"(`{strata_col}` <=> _ds) AND (_cb = _dcb)"),
+            F.expr(f"({ident(strata_col)} <=> _ds) AND (_cb = _dcb)"),
         )
         .drop("_ds", "_dcb")
     )
     full = tagged.filter(F.col("_cls") == 2)
+    tok = f"CAST({ident(tokens_col)} AS DOUBLE)"
     cumd = (
-        f"sum(CAST(`{tokens_col}` AS DOUBLE)) OVER ("
-        f"PARTITION BY `{strata_col}`, _cb "
-        f"ORDER BY _fb ASC, `{id_col}` ASC "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) "
-        f"- CAST(`{tokens_col}` AS DOUBLE) AS _cumd"
+        f"sum({tok}) OVER (PARTITION BY {ident(strata_col)}, _cb "
+        f"ORDER BY _fb ASC, {ident(id_col)} ASC "
+        f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - {tok}"
     )
     part = (
-        tagged.filter(F.col("_cls") == 1)
-        .selectExpr("*", cumd)
+        with_sql(tagged.filter(F.col("_cls") == 1), _cumd=cumd)
         .filter("_cum0 + _cumd < _budget")
         .drop("_cumd")
     )

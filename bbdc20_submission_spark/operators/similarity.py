@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from bbdc20_submission_spark.caching import managed_persist
+from bbdc20_submission_spark.functions.sqlfrag import ident
 
 
 def dot_sql(a_sql: str, b_sql: str) -> str:
@@ -90,14 +91,14 @@ def cosine_topk_bruteforce(
     pin that. Expressions ride SQL strings (r13 build sweep,
     `sameSemantics`-identical to the Column forms — see dot_sql)."""
     q = queries.selectExpr(
-        f"`{id_col}` AS query_id",
-        f"`{vec_col}` AS _qv",
-        f"{l2_norm_sql(f'`{vec_col}`')} AS _qn",
+        f"{ident(id_col)} AS query_id",
+        f"{ident(vec_col)} AS _qv",
+        f"{l2_norm_sql(ident(vec_col))} AS _qn",
     )
     c = corpus.selectExpr(
-        f"`{id_col}` AS match_id",
-        f"`{vec_col}` AS _cv",
-        f"{l2_norm_sql(f'`{vec_col}`')} AS _cn",
+        f"{ident(id_col)} AS match_id",
+        f"{ident(vec_col)} AS _cv",
+        f"{l2_norm_sql(ident(vec_col))} AS _cn",
     )
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -169,7 +170,7 @@ def lsh_bucket_signature(
     for i, p in enumerate(planes):
         weights = ", ".join(repr(x) + "D" for x in p)
         d_expr = (
-            f"aggregate(zip_with(`{name}`, array({weights}), "
+            f"aggregate(zip_with({ident(name)}, array({weights}), "
             "(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, v) -> acc + v)"
         )
         terms.append(
@@ -210,7 +211,7 @@ def cosine_topk_lsh(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("_qv"),
-        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("_qn"),
+        F.expr(l2_norm_sql(ident(vec_col))).alias("_qn"),
         sig.alias("_sig0"),
     )
     if multiprobe:
@@ -229,7 +230,7 @@ def cosine_topk_lsh(
     c = corpus.select(
         F.col(id_col).alias("match_id"),
         F.col(vec_col).alias("_cv"),
-        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("_cn"),
+        F.expr(l2_norm_sql(ident(vec_col))).alias("_cn"),
         sig.alias("_bucket"),
     )
     scored = (
@@ -300,22 +301,22 @@ def quantize_embeddings(
         df.withColumn(
             amax_col,
             F.expr(
-                f"array_max(transform(`{vec_col}`, "
+                f"array_max(transform({ident(vec_col)}, "
                 "x -> abs(CAST(x AS DOUBLE))))"
             ),
         )
         .withColumn(
             f"{out_col}_scale",
             F.expr(
-                f"CASE WHEN `{amax_col}` > 0 THEN `{amax_col}` / 127.0D "
-                "ELSE 1.0D END"
+                f"CASE WHEN {ident(amax_col)} > 0 "
+                f"THEN {ident(amax_col)} / 127.0D ELSE 1.0D END"
             ),
         )
         .withColumn(
             out_col,
             F.expr(
-                f"transform(`{vec_col}`, x -> CAST(round("
-                f"CAST(x AS DOUBLE) / `{out_col}_scale`) AS TINYINT))"
+                f"transform({ident(vec_col)}, x -> CAST(round("
+                f"CAST(x AS DOUBLE) / {ident(out_col + '_scale')}) AS TINYINT))"
             ),
         )
         .drop(amax_col)
@@ -468,7 +469,7 @@ def embedding_near_dups(
         df.select(
             F.col(id_col).alias("_id"),
             F.col(vec_col).alias("_v"),
-            F.expr(l2_norm_sql(f"`{vec_col}`")).alias("_n"),
+            F.expr(l2_norm_sql(ident(vec_col))).alias("_n"),
             F.posexplode(sigs).alias("_band", "_sig"),
         )
     )
@@ -639,7 +640,7 @@ def random_projection(
     for p in planes:
         weights = ", ".join(repr(x) + "D" for x in p)
         dots.append(
-            f"aggregate(zip_with(`{vec}`, array({weights}), "
+            f"aggregate(zip_with({ident(vec)}, array({weights}), "
             "(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, v) -> acc + v)"
         )
     return F.expr("array(%s)" % ", ".join(dots))
@@ -786,7 +787,7 @@ def pq_encode(
         _sql_double_array,
     )
 
-    v_sql = f"CAST(`{vec_col}` AS array<double>)"
+    v_sql = f"CAST({ident(vec_col)} AS array<double>)"
     dsub, codes = pq.dsub, []
     for b in range(pq.m):
         sub = f"slice({v_sql}, {b * dsub + 1}, {dsub})"
@@ -841,8 +842,8 @@ def pq_topk_adc(
     )
     scored = codes.crossJoin(F.broadcast(qdf)).selectExpr(
         "query_id",
-        f"`{id_col}`",
-        f"aggregate(zip_with(`{code_col}`, _table, "
+        ident(id_col),
+        f"aggregate(zip_with({ident(code_col)}, _table, "
         "(c, t) -> element_at(t, c + 1)), 0.0D, "
         "(acc, val) -> acc + val) AS adc_dist",
     )
@@ -884,8 +885,8 @@ def ivfpq_encode(
         _sql_double_array(c) for c in centers.tolist()
     )
     residual = F.expr(
-        f"zip_with(CAST(`{vec_col}` AS array<double>), "
-        f"element_at({centers_sql}, CAST(`{cell_col}` + 1 AS INT)), "
+        f"zip_with(CAST({ident(vec_col)} AS array<double>), "
+        f"element_at({centers_sql}, CAST({ident(cell_col)} + 1 AS INT)), "
         "(x, c) -> x - c)"
     )
     out = out.withColumn("_res", residual)
@@ -938,8 +939,8 @@ def ivfpq_topk(
     )
     scored = index.join(F.broadcast(qdf), cell_col).selectExpr(
         "query_id",
-        f"`{id_col}`",
-        f"aggregate(zip_with(`{code_col}`, _table, "
+        ident(id_col),
+        f"aggregate(zip_with({ident(code_col)}, _table, "
         "(c, t) -> element_at(t, c + 1)), 0.0D, "
         "(acc, val) -> acc + val) AS adc_dist",
     )

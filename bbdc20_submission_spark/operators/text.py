@@ -13,6 +13,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bbdc20_submission_spark.functions.sqlfrag import ident, lit, with_sql
+
 # Minimal per-language stopword lists for the heuristic language ID.
 # Real pipelines plug in fastText/CLD3 via a pandas UDF; the heuristic
 # keeps everything JVM-side and deterministic.
@@ -54,16 +56,7 @@ def ws_tokens(text: Column | str) -> Column:
 def _ws_tokens_sql(text_col: str) -> str:
     """SQL fragment of :func:`ws_tokens` over a plain column name —
     sameSemantics-identical (both parse to split(col, ' ', -1))."""
-    return f"split(`{text_col}`, ' ')"
-
-
-def sql_str_lit(value: str) -> str:
-    """``value`` as a safely quoted SQL string literal. Every operator
-    that interpolates caller-supplied strings into a parsed-SQL
-    fragment MUST route through this (r14, advice item: a vocabulary
-    word like "don't" would otherwise break the parse — or worse,
-    silently change the expression)."""
-    return "'%s'" % value.replace("\\", "\\\\").replace("'", "\\'")
+    return f"split({ident(text_col)}, ' ')"
 
 
 def regex_tokens(text: Column | str, pattern: str = TOKEN_PATTERN) -> Column:
@@ -86,10 +79,7 @@ def stopword_hits(tokens: Column | str, vocabulary: Sequence[str]) -> Column:
     round trips per call as Columns (language_id pays it per language)
     vs one parse; sameSemantics-identical."""
     if isinstance(tokens, str):
-        vocab_sql = "array(%s)" % ",".join(sql_str_lit(w) for w in vocabulary)
-        return F.expr(
-            f"size(filter({tokens}, x -> array_contains({vocab_sql}, x)))"
-        )
+        return F.expr(_stopword_hits_sql(tokens, vocabulary))
     vocab = F.array(*[F.lit(w) for w in vocabulary])
     return F.size(F.filter(tokens, lambda x: F.array_contains(vocab, x)))
 
@@ -152,7 +142,7 @@ def raw_text_stats(
 
 def _stopword_hits_sql(tokens: str, vocabulary: Sequence[str]) -> str:
     """SQL fragment of :func:`stopword_hits` over a SQL fragment."""
-    vocab_sql = "array(%s)" % ",".join(sql_str_lit(w) for w in vocabulary)
+    vocab_sql = "array(%s)" % ",".join(lit(w) for w in vocabulary)
     return f"size(filter({tokens}, x -> array_contains({vocab_sql}, x)))"
 
 
@@ -165,10 +155,10 @@ def _raw_text_stats_sql(
     D-suffixed double literals matching F.lit(0.0)); exists so
     ``_stats_select`` can assemble its whole stat projection in one
     parse instead of ~40 py4j round trips (r14)."""
-    t = f"`{text_col}`"
+    t = ident(text_col)
     n_chars = f"length({t})"
-    n_tokens = f"size(`{toks}`)"
-    alpha = f"({n_chars} - length(translate({t}, {sql_str_lit(_ASCII_LETTERS)}, '')))"
+    n_tokens = f"size({ident(toks)})"
+    alpha = f"({n_chars} - length(translate({t}, {lit(_ASCII_LETTERS)}, '')))"
     digits = f"({n_chars} - length(translate({t}, '0123456789', '')))"
     spaces = f"({n_chars} - length(translate({t}, ' ', '')))"
     punct = f"({n_chars} - {alpha} - {digits} - {spaces})"
@@ -182,7 +172,7 @@ def _raw_text_stats_sql(
         "avg_token_len": _ratio(n_chars, n_tokens),
         "punct_ratio": _ratio(punct, n_chars),
         "digit_ratio": _ratio(digits, n_chars),
-        "stopword_ratio": _ratio(f"`{sw}`", n_tokens),
+        "stopword_ratio": _ratio(ident(sw), n_tokens),
     }
 
 
@@ -222,22 +212,20 @@ def _stats_select(
     translate() subtrees are subexpression-eliminated. Output
     expressions are unchanged — bit-identical stats/quality."""
     tk, swc = "__qs_toks", "__qs_sw"
-    s1 = df.selectExpr("*", f"{_ws_tokens_sql(text_col)} AS `{tk}`")
-    s2 = s1.selectExpr(
-        "*", f"{_stopword_hits_sql(f'`{tk}`', STOPWORDS['en'])} AS `{swc}`"
-    )
+    s1 = with_sql(df, **{tk: _ws_tokens_sql(text_col)})
+    s2 = with_sql(s1, **{swc: _stopword_hits_sql(ident(tk), STOPWORDS["en"])})
     raw = _raw_text_stats_sql(text_col, toks=tk, sw=swc)
-    out_exprs = [f"`{c}`" for c in df.columns] + [
-        f"CAST({raw['n_chars']} AS BIGINT) AS stat_n_chars",
-        f"CAST({raw['n_tokens']} AS BIGINT) AS stat_n_tokens",
-        f"round({raw['avg_token_len']}, 6) AS stat_avg_token_len",
-        f"round({raw['punct_ratio']}, 6) AS stat_punct_ratio",
-        f"round({raw['digit_ratio']}, 6) AS stat_digit_ratio",
-        f"round({raw['stopword_ratio']}, 6) AS stat_stopword_ratio",
-    ]
+    stats = {
+        "stat_n_chars": f"CAST({raw['n_chars']} AS BIGINT)",
+        "stat_n_tokens": f"CAST({raw['n_tokens']} AS BIGINT)",
+        "stat_avg_token_len": f"round({raw['avg_token_len']}, 6)",
+        "stat_punct_ratio": f"round({raw['punct_ratio']}, 6)",
+        "stat_digit_ratio": f"round({raw['digit_ratio']}, 6)",
+        "stat_stopword_ratio": f"round({raw['stopword_ratio']}, 6)",
+    }
     if with_quality:
-        out_exprs.append(f"round({_quality_sql(raw)}, 6) AS quality")
-    return s2.selectExpr(*out_exprs)
+        stats["quality"] = f"round({_quality_sql(raw)}, 6)"
+    return with_sql(s2, df.columns, **stats)
 
 
 def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -270,17 +258,15 @@ def language_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred
     tk = "__lid_toks"
     base = df.select("*", F.expr(_ws_tokens_sql(text_col)).alias(tk))
     scored = base.select(
-        "*", *[stopword_hits(f"`{tk}`", ws).alias(f"_hits_{lang}") for lang, ws in sorted(STOPWORDS.items())]
+        "*", *[stopword_hits(ident(tk), ws).alias(f"_hits_{lang}") for lang, ws in sorted(STOPWORDS.items())]
     )
     langs = sorted(STOPWORDS)
     # one parsed argmax projection (r14): the Column form built two
     # literal arrays + extract element-by-element (~15 py4j calls)
     hits = "array(%s)" % ", ".join(f"_hits_{lang}" for lang in langs)
-    lang_arr = "array(%s)" % ", ".join(sql_str_lit(lang) for lang in langs)
+    lang_arr = "array(%s)" % ", ".join(lit(lang) for lang in langs)
     best = f"{lang_arr}[array_position({hits}, array_max({hits})) - 1]"
-    return scored.selectExpr(
-        *[f"`{c}`" for c in df.columns], f"{best} AS `{out_col}`"
-    )
+    return with_sql(scored, df.columns, **{out_col: best})
 
 
 def rolling_fingerprint(
@@ -461,7 +447,7 @@ def with_repetition_flag(
         )
     raw = df.select("*", _repetition_counts(F.col(text_col)).alias("_r"))
     flag = _repetition_final_exprs(top_frac_max, dup_2gram_max)[-1]
-    return raw.select(*df.columns, flag.alias(out_col))
+    return raw.withColumn(out_col, flag).drop("_r")
 
 
 def classifier_weights(n_features: int = 256, seed: int = 13) -> list[float]:
@@ -518,18 +504,16 @@ def classifier_quality_score(
     # token array is projected once below the score (two references —
     # the fold and the size — block CollapseProject, so the old form's
     # TWO split(text) evaluations per row become one).
-    w_sql = "array(%s)" % ",".join(f"{float(w)!r}D" for w in weights)
+    w_sql = "array(%s)" % ",".join(lit(float(w)) for w in weights)
     tk = "__clf_toks"
     base = df.select("*", F.expr(_ws_tokens_sql(text_col)).alias(tk))
     z_sql = (
-        f"aggregate(`{tk}`, 0.0D, (acc, x) -> acc + element_at({w_sql}, "
+        f"aggregate({ident(tk)}, 0.0D, (acc, x) -> acc + element_at({w_sql}, "
         "CAST(pmod(CAST(conv(substring(md5(x), 1, 8), 16, 10) AS BIGINT), "
-        f"{n_features}) + 1 AS INT))) / size(`{tk}`)"
+        f"{n_features}) + 1 AS INT))) / size({ident(tk)})"
     )
-    return base.select(
-        *[F.col(c) for c in df.columns],
-        F.expr(f"1.0D / (1.0D + exp(-({z_sql})))").alias(out_col),
-    )
+    score = f"1.0D / (1.0D + exp(-({z_sql})))"
+    return with_sql(base, df.columns, **{out_col: score})
 
 
 def bigram_lm_scores(
@@ -566,9 +550,7 @@ def bigram_lm_scores(
     bigram extraction guards single-token docs (no descending-
     ``sequence`` trap) and every arithmetic step is reproducible in
     DuckDB (see the d4 oracle)."""
-    base = df.selectExpr(
-        f"`{id_col}`", f"{_ws_tokens_sql(text_col)} AS _t"
-    )
+    base = df.selectExpr(ident(id_col), f"{_ws_tokens_sql(text_col)} AS _t")
     uni = (
         base.selectExpr("explode(_t) AS _w1")
         .groupBy("_w1")
@@ -587,7 +569,7 @@ def bigram_lm_scores(
         "CASE WHEN i < size(_t) THEN element_at(_t, CAST(i + 1 AS INT)) "
         "ELSE CAST(NULL AS STRING) END AS _w2)), s -> s._w2 IS NOT NULL)"
     )
-    doc_bi = base.selectExpr(f"`{id_col}`", f"inline({pair_expr})")
+    doc_bi = base.selectExpr(ident(id_col), f"inline({pair_expr})")
     bi = doc_bi.groupBy("_w1", "_w2").agg(F.count("*").alias("_c2"))
     k = float(add_k)
     scored = (
@@ -595,7 +577,7 @@ def bigram_lm_scores(
         .join(bi, ["_w1", "_w2"])  # fit-on-self: always matches
         .crossJoin(F.broadcast(vocab))
         .selectExpr(
-            f"`{id_col}`",
+            ident(id_col),
             f"ln((_c2 + {k!r}D) / (_c1 + {k!r}D * _V)) AS _s",
         )
     )
@@ -603,10 +585,10 @@ def bigram_lm_scores(
         F.count("*").alias("_n"), F.round(F.avg("_s"), 6).alias("_lp")
     )
     return (
-        df.selectExpr(f"`{id_col}`")
+        df.selectExpr(ident(id_col))
         .join(agg, id_col, "left")
         .selectExpr(
-            f"`{id_col}`",
+            ident(id_col),
             "CAST(coalesce(_n, 0) AS BIGINT) AS n_bigrams",
             "coalesce(_lp, 0.0D) AS lm_logp",
         )

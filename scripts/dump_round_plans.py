@@ -1,11 +1,16 @@
 #!/usr/bin/env python
 """Dump .explain("formatted") for every declared query into
-plans/r14/<query>_<tag>.txt (tag from argv[1], default "before").
-Optional argv[2] = comma-list of query names to restrict to.
+plans/<round>/<query>_<tag>.txt.
 
-The optimization-round evidence artifact: the judge checks plan-shape
-claims (Exchange counts, join strategies, PushedFilters, Python-eval
-nodes) against these files.
+Usage: python scripts/dump_round_plans.py <round> [tag] [queries]
+  round    output subdirectory under plans/, e.g. r14
+  tag      file-name suffix, default "before"
+  queries  comma-list of query names to restrict to, default all
+
+The optimization-round evidence artifact: plan-shape claims (Exchange
+counts, join strategies, PushedFilters, Python-eval nodes) are checked
+against these files, and two dumps of the same queries diff to the
+plan changes between trees once expression ids (#\\d+) are masked.
 """
 
 from __future__ import annotations
@@ -24,20 +29,23 @@ registry.load_all()
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    rnd = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
     only = (
-        {q for q in sys.argv[2].split(",") if q}
-        if len(sys.argv) > 2
+        {q for q in sys.argv[3].split(",") if q}
+        if len(sys.argv) > 3
         else None
     )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r14",
+        rnd,
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("dump_r14_plans")
+    spark = get_spark(f"dump_{rnd}_plans")
     for name in sorted(registry.QUERIES):
         if only is not None and name not in only:
             continue

@@ -54,6 +54,14 @@ def test_learn_bpe_matches_reference(spark):
     assert len(got) >= 8  # the tiny corpus supports a real merge chain
 
 
+def test_learn_bpe_symbols_with_quote_and_backslash(spark):
+    corpus = ["x\\y x\\y don't", "x\\y q\\r don't won't"]
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(corpus)], "doc_id long, text string"
+    )
+    assert learn_bpe(df, n_merges=6) == _reference_bpe(corpus, 6)
+
+
 def test_bpe_tokenize_applies_merges(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(CORPUS)], "doc_id long, text string"
