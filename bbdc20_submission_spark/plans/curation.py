@@ -8,11 +8,18 @@ individual LLM-data operators exist for, as one declarative DAG.
       │                            keep each cluster's representative)
       │ 2b. substring span dedup  (optional; repeated 8-token windows
       │                            excised, Lee-et-al style)
+      │ 2c. decontamination       (optional; eval-set k-gram spans
+      │                            excised)
       │ 3. quality + language     (heuristic filters, narrow maps)
       │ 4. PII scrub              (chained regexp_replace)
+      │ 4b. boilerplate strip     (optional; chunks repeated across
+      │                            docs removed, after a checkpoint)
       │ 5. chunking               (fixed token windows, explode)
       │ 6. deterministic sampling (per-language stratified hash rates)
       ▼ curated chunks + per-stage audit counts
+
+The stages run in this one order: every stage after near-dup
+clustering sees only the near-unique survivors.
 
 Every stage is built from the operators in ``operators/`` — this
 module only composes them, so each stage's scale properties (hash-only
@@ -20,10 +27,12 @@ dedup shuffle, banded LSH equi-joins, narrow filters, explode
 generators, shuffle-free sampling) are exactly the ones certified by
 the per-operator driver queries and plan tests.
 
-With ``audit=False`` (the production default) the pipeline stays lazy
-up to ONE materialization — the near-dup edge list inside
-``dedup_clusters`` (which d12 pays too) — and the returned frame runs
-as a single composed plan. ``audit=True`` additionally counts the
+With ``audit=False`` (the production default) building the DAG fires
+few eager jobs: the near-dup edge collect inside ``dedup_clusters``
+(which d12 pays too), plus, when the boilerplate strip is on, the
+post-filter ``localCheckpoint`` of the scrubbed survivors (span dedup
+adds its own size probe). Everything else runs as one composed plan
+under the caller's action. ``audit=True`` additionally counts the
 survivors after every stage (one job per stage, each re-running the
 prefix): a diagnostics mode for tests/sampling runs, not something to
 switch on over 100 TB.
@@ -209,39 +218,26 @@ def curate(
     # hashed_shingle_sets frame — the survivors are tokenized and
     # shingled exactly once for the whole near-dup stage.
     score = config.keeper_score_col
-
-    def _build_clusters() -> DataFrame:
-        """Near-dup cluster labels. EAGER: ``dedup_clusters`` collects
-        the verified edge list (one bounded job) when called."""
-        if precomputed_pairs is not None:
-            # a pipeline that already materialized the verified edge
-            # set (a prior curate() audit, a d12-style clustering run,
-            # a daily dedup job) passes it here and the whole LSH
-            # prefix — shingling, signatures, banding, verify — is
-            # skipped. CONTRACT: edges were computed over THIS corpus
-            # after the same blocklist + exact dedup (foreign endpoint
-            # ids would become phantom min-id cluster labels). Keeper
-            # scores fall back to the member-fetch path unless the
-            # frame already carries <score>_a/_b columns from
-            # jaccard_pairs(carry=...).
-            pairs = precomputed_pairs
-            inline = (
-                (f"{score}_a", f"{score}_b")
-                if score and {f"{score}_a", f"{score}_b"} <= set(pairs.columns)
-                else None
-            )
-            return dedup_clusters(
-                exact_unique,
-                pairs,
-                id_col,
-                score_col=score or "score",
-                inline_score_cols=inline,
-                keeper_scores=(
-                    docs.select(id_col, score)
-                    if score and inline is None
-                    else None
-                ),
-            )
+    if precomputed_pairs is not None:
+        # a pipeline that already materialized the verified edge set (a
+        # prior curate() audit, a d12-style clustering run, a daily
+        # dedup job) passes it here and the whole LSH prefix —
+        # shingling, signatures, banding, verify — is skipped.
+        # CONTRACT: edges were computed over THIS corpus after the same
+        # blocklist + exact dedup (foreign endpoint ids would become
+        # phantom min-id cluster labels). Keeper scores fall back to the
+        # member-fetch path unless the frame already carries
+        # <score>_a/_b columns from jaccard_pairs(carry=...).
+        pairs = precomputed_pairs
+        inline = (
+            (f"{score}_a", f"{score}_b")
+            if score and {f"{score}_a", f"{score}_b"} <= set(pairs.columns)
+            else None
+        )
+        keeper_scores = (
+            docs.select(id_col, score) if score and inline is None else None
+        )
+    else:
         sets = managed_persist(
             hashed_shingle_sets(
                 exact_unique, id_col, text_col, carry=(score,) if score else ()
@@ -259,82 +255,32 @@ def curate(
             sets=sets,
             carry=(score,) if score else (),
         ).filter(F.col("jaccard") >= config.near_dup_jaccard)
-        # the quality-keeper policy (keep each cluster's max-score
-        # member) rides INSIDE dedup_clusters: keeper scores were
-        # CARRIED onto the verified edge rows by jaccard_pairs (every
-        # cluster member is an edge endpoint), so the driver-union-find
-        # path reads them off the edges it already collected — zero
-        # extra jobs or scans — and the all-Spark path above the edge
-        # bound derives its score frame from the same edge columns
-        # (reselect_keepers semantics unchanged). The id spine handed
-        # to dedup_clusters is the PERSISTED exact-dedup keep-id frame
-        # — the same id set as exact_unique by construction — so
-        # consumers of the cluster labels re-read a cached ids-only
-        # column instead of re-running the corpus scan + keep
-        # semi-join under every reference (r14, guide §2.4).
-        return dedup_clusters(
-            keep,
-            pairs,
-            id_col,
-            score_col=score or "score",
-            inline_score_cols=(f"{score}_a", f"{score}_b") if score else None,
-        )
-
-    def _quality_lang_filtered(base: DataFrame) -> DataFrame:
-        """Stages 3+4's filter: quality, language, optional classifier
-        gate — all narrow per-row maps over ``base``."""
-        scored = quality_score(base, text_col)
-        scored = language_id(scored, text_col)
-        keep_pred = (F.col("quality") >= config.min_quality) & F.col(
-            "lang_pred"
-        ).isin(*config.keep_langs)
-        if config.min_clf_score is not None:
-            from bbdc20_submission_spark.operators.text import (
-                classifier_quality_score,
-            )
-
-            scored = classifier_quality_score(scored, text_col)
-            keep_pred = keep_pred & (
-                F.col("clf_score") >= config.min_clf_score
-            )
-        return scored.filter(keep_pred)
-
-    # r14 (guide §2.6): when the strip stage will checkpoint the
-    # scrubbed survivors anyway, that materialization job and the
-    # near-dup edge-collect job are INDEPENDENT — quality/language/
-    # classifier filters and the PII scrub are deterministic per-row
-    # maps, so they commute with the reps row-filter: scrubbing the
-    # exact-unique survivors first and semi-joining the cluster reps
-    # after yields byte-identical rows. Running the two jobs
-    # concurrently hides the shorter one entirely (previously the
-    # checkpoint could not even be PLANNED until the edge collect
-    # finished). Serial fallback whenever a stage between them needs
-    # the near-unique frame (span dedup / decontamination rewrite the
-    # text before scoring) or per-stage audit/observe taps are on.
-    overlap = (
-        config.strip_boilerplate_min_docs is not None
-        and not audit
-        and not observe
-        and config.dedup_spans_min_count is None
-        and eval_set is None
+        # keeper scores were CARRIED onto the verified edge rows by
+        # jaccard_pairs (every cluster member is an edge endpoint), so
+        # the driver-union-find path reads them off the edges it
+        # already collected — zero extra jobs or scans — and the
+        # all-Spark path above the edge bound derives its score frame
+        # from the same edge columns.
+        inline = (f"{score}_a", f"{score}_b") if score else None
+        keeper_scores = None
+    # the quality-keeper policy (keep each cluster's max-score member)
+    # rides INSIDE dedup_clusters, which collects the verified edge list
+    # here (one bounded EAGER job). The id spine is the PERSISTED
+    # exact-dedup keep-id frame — the same id set as exact_unique by
+    # construction — so consumers of the cluster labels re-read a
+    # cached ids-only column instead of re-running the corpus scan +
+    # keep semi-join under every reference.
+    clusters = dedup_clusters(
+        keep,
+        pairs,
+        id_col,
+        score_col=score or "score",
+        inline_score_cols=inline,
+        keeper_scores=keeper_scores,
     )
-    if overlap:
-        pre = scrub_text(
-            _quality_lang_filtered(exact_unique), text_col, out_col="_scrubbed"
-        ).select(id_col, "_scrubbed", "lang_pred", "quality")
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(1) as pool:
-            ckpt_future = pool.submit(pre.localCheckpoint)
-            clusters = _build_clusters()
-            pre_ckpt = ckpt_future.result()
-        reps = clusters.filter(~F.col("is_duplicate")).select(id_col)
-        scrubbed = pre_ckpt.join(reps, id_col, "left_semi")
-    else:
-        clusters = _build_clusters()
-        reps = clusters.filter(~F.col("is_duplicate")).select(id_col)
-        near_unique = exact_unique.join(reps, id_col, "left_semi")
-        near_unique = _tap("near_unique", near_unique)
+    reps = clusters.filter(~F.col("is_duplicate")).select(id_col)
+    near_unique = exact_unique.join(reps, id_col, "left_semi")
+    near_unique = _tap("near_unique", near_unique)
 
     # 2b. optional duplicate-substring span dedup on the survivors:
     # repeated >=min_count 8-token windows are excised (single pass,
@@ -389,12 +335,20 @@ def curate(
         near_unique = _tap("decontaminated", near_unique)
 
     # 3+4. quality, language, (optional) classifier, scrub: all narrow
-    # maps — one projection pipeline, no shuffles between them. (The
-    # overlapped path above already ran the same maps pre-reps.)
-    if not overlap:
-        filtered = _quality_lang_filtered(near_unique)
-        filtered = _tap("quality_lang_pass", filtered)
-        scrubbed = scrub_text(filtered, text_col, out_col="_scrubbed")
+    # maps — one projection pipeline, no shuffles between them.
+    scored = language_id(quality_score(near_unique, text_col), text_col)
+    keep_pred = (F.col("quality") >= config.min_quality) & F.col(
+        "lang_pred"
+    ).isin(*config.keep_langs)
+    if config.min_clf_score is not None:
+        from bbdc20_submission_spark.operators.text import (
+            classifier_quality_score,
+        )
+
+        scored = classifier_quality_score(scored, text_col)
+        keep_pred = keep_pred & (F.col("clf_score") >= config.min_clf_score)
+    filtered = _tap("quality_lang_pass", scored.filter(keep_pred))
+    scrubbed = scrub_text(filtered, text_col, out_col="_scrubbed")
 
     # 4b. optional cross-document boilerplate strip on the scrubbed
     # text (repeated-chunk fingerprints; see operators.chunking).
@@ -421,13 +375,10 @@ def curate(
         # the two metadata columns that ride the chunk explode) BEFORE
         # materializing: the original text column is dead after scrub,
         # and checkpointing it would double the write and every
-        # post-checkpoint scan. (The overlapped path checkpointed the
-        # same projection already, concurrently with the edge collect;
-        # its reps semi-join on top is a cheap cached-spine join.)
-        if not overlap:
-            scrubbed = scrubbed.select(
-                id_col, "_scrubbed", "lang_pred", "quality"
-            ).localCheckpoint()
+        # post-checkpoint scan.
+        scrubbed = scrubbed.select(
+            id_col, "_scrubbed", "lang_pred", "quality"
+        ).localCheckpoint()
         bp_input = scrubbed.select(id_col, F.col("_scrubbed").alias(text_col))
         # detection and removal share ONE persisted hashed-chunk frame:
         # the chunk explode + md5 over the corpus runs once, not twice

@@ -62,7 +62,8 @@ def _events_ts_is_nanos(path: str) -> bool:
 # vs 10.8 s on the same volume staged as 32 files. Parquet can only be
 # read row-group-parallel, so a big single-row-group file is ONE chunk
 # no matter how Spark sizes byte splits. When the effective chunk
-# count is below a quarter of the cores AND the DECODED payload per
+# count is below a quarter of the cores (below 2 on hosts with 2-7
+# cores, so one chunk still re-splits there) AND the DECODED payload per
 # chunk is heavy enough that the one-time round-robin shuffle is
 # trivially amortized, insert an explicit repartition to
 # defaultParallelism. At 100 TB real inputs carry thousands of row
@@ -200,7 +201,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
         cores = spark.sparkContext.defaultParallelism
         if (
             str_bytes >= chunks * _RESPLIT_STR_BYTES_PER_CHUNK
-            and chunks < max(1, cores // 4)
+            and chunks < max(min(2, cores), cores // 4)
         ):
             # predicate pushdown and column pruning both commute with
             # Repartition in Catalyst, so the scan keeps its

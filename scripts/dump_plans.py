@@ -119,13 +119,15 @@ HEADLINERS = {
         "AQE turns broadcast when the vocab dim is small."
     ),
     "c1_curation_dag": (
-        "The whole curation pipeline as ONE composed lazy plan: the "
-        "C4 source blocklist is a scan-pushed predicate (stage 0 costs "
-        "zero extra operators), exact-dedup keep-ids ride a persisted "
-        "O(unique) id set, LSH near-dup edges are the single bounded "
-        "materialization (shared with d12), filters/scrub are narrow, "
-        "the boilerplate strip reads the post-filter localCheckpoint "
-        "boundary, and chunking is a generator explode."
+        "The whole curation pipeline in one stage order with two "
+        "eager build jobs: the bounded LSH near-dup edge collect "
+        "(shared with d12) and the post-filter localCheckpoint of the "
+        "near-unique, filtered, scrubbed survivors. Everything before "
+        "that boundary (scan-pushed C4 blocklist, exact-dedup keep-ids "
+        "as a persisted O(unique) id set, the reps semi-join, narrow "
+        "filters/scrub) runs inside the checkpoint, so the returned "
+        "plan starts at its scan: the boilerplate strip reads it, and "
+        "chunking is a generator explode."
     ),
     "d9_simhash_near_dups": (
         "Multi-index Hamming search: fingerprints persisted (2 longs/"

@@ -4,6 +4,7 @@ operators, schema/determinism, and sampling reproducibility."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from bbdc20_submission_spark.plans.curation import CurationConfig, curate
@@ -414,18 +415,36 @@ def test_curate_blocklist_keeps_null_sources(spark, sf_dir):
     assert nulled.filter(F.col("source").isNull()).count() > 0
 
 
-def test_curate_observe_mode_matches_audit_counts(spark, sf_dir):
+@pytest.mark.parametrize(
+    "cfg",
+    [
+        CurationConfig(blocked_sources=("src19",)),
+        # c1's config: the keeper policy plus the boilerplate strip and
+        # its checkpoint, under observe
+        CurationConfig(
+            strip_boilerplate_min_docs=2,
+            blocked_sources=("src19",),
+            keeper_score_col="doc_len",
+        ),
+    ],
+    ids=["blocklist", "c1"],
+)
+def test_curate_observe_mode_matches_audit_counts(spark, sf_dir, cfg):
     """observe=True: stage counts arrive as Observation side-channels
     of the one output action — they must equal audit mode's per-stage
     count() results while launching strictly fewer jobs than audit
     (no per-stage re-execution of the prefix; a few bookkeeping jobs
-    may appear where observe nodes block exchange reuse)."""
+    may appear where observe nodes block exchange reuse). The observed
+    run's rows equal a plain run's."""
+    from collections import Counter
+
     from pyspark.sql import Observation
 
     from bbdc20_submission_spark.plans.curation import observed_counts
 
     docs = load_table(spark, "documents", sf_dir)
-    cfg = CurationConfig(blocked_sources=("src19",))
+    if cfg.keeper_score_col == "doc_len":
+        docs = docs.withColumn("doc_len", F.length("text"))
 
     tracker = spark.sparkContext.statusTracker()
 
@@ -445,7 +464,7 @@ def test_curate_observe_mode_matches_audit_counts(spark, sf_dir):
     def run_observed():
         out, obs = curate(docs, cfg, observe=True)
         out.write.mode("overwrite").format("noop").save()
-        return obs
+        return out, obs
 
     audit, jobs_audit = jobs_during(run_audit)
 
@@ -453,7 +472,7 @@ def test_curate_observe_mode_matches_audit_counts(spark, sf_dir):
     _, obs = curate(docs, cfg)
     assert obs == {}
 
-    obs, jobs_observed = jobs_during(run_observed)
+    (out_observed, obs), jobs_observed = jobs_during(run_observed)
     assert set(obs) == set(audit)
     assert all(isinstance(o, Observation) for o in obs.values())
     assert observed_counts(obs) == audit
@@ -461,7 +480,10 @@ def test_curate_observe_mode_matches_audit_counts(spark, sf_dir):
     # audit mode's count()-per-stage
     assert jobs_observed < jobs_audit, (jobs_observed, jobs_audit)
 
-    import pytest
+    def rows(df):
+        return Counter(map(tuple, df.collect()))
+
+    assert rows(curate(docs, cfg)[0]) == rows(out_observed)
 
     with pytest.raises(ValueError, match="mutually exclusive"):
         curate(docs, cfg, audit=True, observe=True)
